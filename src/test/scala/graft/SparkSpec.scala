@@ -3,8 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.StreamingConf
+
 /** Shared local session for all suites (one JVM-wide session — Spark
-  * session startup dominates suite time otherwise). */
+  * session startup dominates suite time otherwise). It writes streaming
+  * checkpoints through the engine's fork-free local file system, as a
+  * `StreamingConf.applyTo` session does; the state-store and broadcast
+  * entries stay with the suites that call `applyTo`. */
 object SparkSpec {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +17,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(StreamingConf.checkpointFs)
       .appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
